@@ -7,6 +7,30 @@ boundary, UTC session time so event-time semantics are unambiguous,
 and shuffle partitions sized to the parallelism actually available
 rather than the 200-partition default.
 
+Streaming checkpoints are written so that a micro-batch commit stays
+cheap on a host without Hadoop's native library. Without NativeIO,
+Hadoop's local filesystem forks a shell process per checkpoint file:
+``chmod`` on every create (``RawLocalFileSystem.setPermission``) and
+``readlink`` on every ``getFileLinkStatus``, which Spark's default
+FileContext checkpoint manager calls on every rename. On 4 cores the
+200-player stream paid ~55 ``chmod`` + ~150 ``readlink`` forks per
+micro-batch and a 1.3 s RocksDB commit, most of it the synchronous
+snapshot upload. Two confs take the commit off those paths
+(``checkpoint_confs``); the same stream then forks ~38 ``chmod`` per
+micro-batch (about four per state partition for its changelog and
+checksums, the rest for the offset and commit logs) and commits in
+~30 ms:
+
+- RocksDB changelog checkpointing: a commit writes one changelog file
+  per state partition; the snapshot (SST copies + zip) moves to the
+  background maintenance thread every ``minDeltasForSnapshot``
+  versions. State stays on RocksDB.
+- The FileSystem checkpoint manager, only when the default filesystem
+  is ``file:``. There both managers implement no-overwrite rename as
+  check-then-rename, so nothing changes but the skipped ``readlink``;
+  checksum sidecars stay. On HDFS, Spark's FileContext default stays,
+  since its rename is really atomic there.
+
 The reference engine has no equivalent (a single Azure Functions
 process, reference DispatcherFunction.cs:21-23); this module is where
 Spark's execution model replaces the Functions host.
@@ -19,6 +43,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+
+CHANGELOG_KEY = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 TABLES = (
     "region",
@@ -57,7 +87,9 @@ def get_spark(app_name: str = "eventstreamer-spark", cpus: int | None = None) ->
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # RocksDB state store: streaming state spills to local disk
         # instead of growing the JVM heap — the only viable provider
-        # once keyed state exceeds executor memory (SURVEY.md §7)
+        # once keyed state exceeds executor memory (SURVEY.md §7).
+        # Its commits write changelogs and leave snapshots to the
+        # maintenance thread; see checkpoint_confs.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -65,7 +97,33 @@ def get_spark(app_name: str = "eventstreamer-spark", cpus: int | None = None) ->
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    checkpoint_confs(spark)
     return spark
+
+
+def checkpoint_confs(spark: SparkSession) -> None:
+    """Set the two runtime confs that keep a streaming commit off
+    Hadoop's shell forks (module docstring): RocksDB changelog commits,
+    and the FileSystem checkpoint manager when the session's default
+    filesystem is ``file:``."""
+    spark.conf.set(CHANGELOG_KEY, "true")
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if hadoop_conf.get("fs.defaultFS", "file:///").startswith("file:"):
+        spark.conf.set(FILE_MANAGER_KEY, FILE_MANAGER)
+
+
+def positive_int_env(name: str, default: int) -> int:
+    """``$name`` as an int >= 1 (``default`` when unset or empty); any
+    other value raises a ValueError that names the variable."""
+    raw = os.environ.get(name)
+    if not raw:
+        return default
+    try:
+        if int(raw) >= 1:
+            return int(raw)
+    except ValueError:
+        pass
+    raise ValueError(f"{name} must be an integer >= 1, got {raw!r}")
 
 
 def configure(spark: SparkSession) -> SparkSession:
@@ -75,9 +133,14 @@ def configure(spark: SparkSession) -> SparkSession:
     string formatting and Arrow transfer must behave identically there,
     so every config that can be set post-startup is (re)applied here.
     """
+    # Parsed first, so a bad value fails before any conf changes.
+    partitions = positive_int_env(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", max(spark.sparkContext.defaultParallelism, 8)
+    )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    checkpoint_confs(spark)
     # Size shuffle/state partitions to the actual parallelism: batch
     # queries are insulated by AQE coalescing either way, but a
     # streaming query pins its state-store partition count from this
@@ -88,13 +151,7 @@ def configure(spark: SparkSession) -> SparkSession:
     # on a fixed heap raises it instead of raising the heap (the same
     # sizing any real deployment does; the x100 replica runs at the
     # DEFAULT heap with 256 partitions where 8 OOMs).
-    import os
-
-    override = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        override or str(max(spark.sparkContext.defaultParallelism, 8)),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     # Input-split sizing, the map-side twin of the shuffle knob: a
     # single large parquet read as 128 MB splits hands each task a
     # ~100k+-doc partial hash-agg map, which is what actually OOMs a

@@ -38,6 +38,7 @@ from eventstreamer_spark.functions.casting import fmt_ts, round6
 from eventstreamer_spark.operators.windowed import tumbling_stats
 from eventstreamer_spark.memo import BoundedMemo
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.session import positive_int_env
 from eventstreamer_spark.sources.tables import load_events
 
 EVENTS_DDL = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -134,12 +135,14 @@ def run_to_memory(
     survives state larger than memory or a driver crash. All confs are
     restored and the checkpoint dir removed on exit.
 
-    Measured warm floor (round 4, sf0.1): ~1.0 s per one-batch gate
-    query, of which the micro-batch itself (source listing + batch
-    plan + state commit + sink) is ~0.4-0.6 s and the memory-sink
-    read-back ~0.3-0.4 s. Knobs probed and found neutral at this
-    scale: availableNow vs processAllAvailable, 4 vs 8 shuffle
-    partitions. What did move the needle: the per-sf-dir schema memo
+    Measured warm floor (sf0.1, local[4], best of 3 warm runs):
+    stream_dedup_counts 0.73 s and stream_tumbling_stats 1.46 s with
+    the session's FileSystem checkpoint manager, against 1.17 s and
+    1.74 s under Spark's FileContext default, whose ``readlink`` fork
+    per checkpoint rename the gate pays too (session.py). Knobs
+    probed (round 4) and found neutral at this scale: availableNow
+    vs processAllAvailable, 4 vs 8 shuffle partitions. What did move
+    the needle: the per-sf-dir schema memo
     (saves a driver footer read per query, two for the dual-branch
     join) and minBatchesToRetain=1 below. The residual cost is the
     streaming engine's per-query machinery, not plan shape — batch
@@ -187,6 +190,7 @@ def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list
     import tempfile
 
     spark = df.sparkSession
+    gate_parts = positive_int_env("SPARK_GRAFT_GATE_PARTITIONS", 8)
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     part_key = "spark.sql.shuffle.partitions"
     retain_key = "spark.sql.streaming.minBatchesToRetain"
@@ -199,7 +203,7 @@ def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list
         prov_key,
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
     )
-    spark.conf.set(part_key, os.environ.get("SPARK_GRAFT_GATE_PARTITIONS", "8"))
+    spark.conf.set(part_key, str(gate_parts))
     # Gate runs are one-batch and never restarted from this checkpoint, so
     # retaining the default 100 committed batches only adds checkpoint I/O.
     spark.conf.set(retain_key, "1")

@@ -10,12 +10,19 @@ no-loss state machine).
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from eventstreamer_spark.session import (
+    CHANGELOG_KEY,
+    FILE_MANAGER_KEY,
+    checkpoint_confs,
+    configure,
+)
 from eventstreamer_spark.sources.tables import load_events
 from eventstreamer_spark.streaming.pipeline import (
     observed_windowed_stream,
@@ -35,8 +42,6 @@ def _write_chunks(spark, tmpdir: str, chunks: list[list[tuple]]) -> str:
     """Write micro-batch chunk files, one parquet file per chunk, with
     strictly increasing mtimes — FileStreamSource orders new files by
     modification time, so this pins the batch order."""
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -570,6 +575,92 @@ def test_rocksdb_state_store_provider_works(spark, tmp_path):
         .collect()
     )
     assert [(r.key, r.n_events) for r in got] == [("1", 2), ("2", 1)]
+    # Changelog commits: every state partition holds one changelog per
+    # version and no per-commit snapshot zip.
+    parts = _state_partition_dirs(ckpt)
+    assert parts
+    for d in parts:
+        names = os.listdir(d)
+        assert "1.changelog" in names and "2.changelog" in names, (d, names)
+        assert not [n for n in names if n.endswith(".zip")], (d, names)
+
+
+def _state_partition_dirs(ckpt: str) -> list[str]:
+    """``state/0/<p>`` of a checkpoint, one per state partition."""
+    root = os.path.join(ckpt, "state", "0")
+    return [os.path.join(root, p) for p in sorted(os.listdir(root)) if p.isdigit()]
+
+
+def _version(name: str) -> int:
+    """State version of a state-store file: ``3.zip``, ``.3.changelog.crc``."""
+    return int(name.lstrip(".").split(".")[0])
+
+
+def _checkpoint_manager(spark) -> str:
+    """Class name of the checkpoint manager Spark builds for a local
+    path under the session's Hadoop conf (nothing is written)."""
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path("file:/tmp/es_ckpt_probe"), conf
+    )
+    return manager.getClass().getSimpleName()
+
+
+def test_session_checkpoints_skip_filecontext_manager(spark):
+    """get_spark's session writes checkpoints through the FileSystem
+    manager (no ``readlink`` fork per rename) with RocksDB changelog
+    commits on."""
+    assert _checkpoint_manager(spark) == "FileSystemBasedCheckpointFileManager"
+    assert spark.conf.get(CHANGELOG_KEY) == "true"
+
+
+def test_configure_applies_checkpoint_confs_on_file_only(spark):
+    """A session built without the checkpoint confs (one handed in from
+    outside) gets them from configure(); a session whose default filesystem is not
+    ``file:`` keeps Spark's FileContext manager."""
+    saved = {k: spark.conf.get(k, None) for k in (CHANGELOG_KEY, FILE_MANAGER_KEY)}
+    try:
+        for k in saved:
+            spark.conf.unset(k)
+        assert _checkpoint_manager(spark) == "FileContextBasedCheckpointFileManager"
+        configure(spark)
+        assert _checkpoint_manager(spark) == "FileSystemBasedCheckpointFileManager"
+        assert spark.conf.get(CHANGELOG_KEY) == "true"
+
+        spark.conf.unset(FILE_MANAGER_KEY)
+        spark.conf.set("fs.defaultFS", "hdfs://namenode:8020")
+        try:
+            checkpoint_confs(spark)
+            assert spark.conf.get(FILE_MANAGER_KEY, None) is None
+        finally:
+            spark.conf.unset("fs.defaultFS")
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize(
+    "knob", ["SPARK_GRAFT_GATE_PARTITIONS", "SPARK_GRAFT_SHUFFLE_PARTITIONS"]
+)
+@pytest.mark.parametrize("bad", ["eight", "0"])
+def test_bad_partition_knob_fails_before_any_batch(spark, tmp_path, monkeypatch, knob, bad):
+    """Both partition knobs size streaming state partitions; a value
+    that is not an int >= 1 raises a ValueError naming the variable
+    before any conf changes or any micro-batch runs."""
+    path = _write_chunks(spark, str(tmp_path), [[_ev(1, "2024-01-01 00:00:00.100")]])
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setenv(knob, bad)
+    with pytest.raises(ValueError, match=knob):
+        if knob == "SPARK_GRAFT_GATE_PARTITIONS":
+            run_to_memory(windowed_stream(stream_events(spark, path)), "bad_knob_sink")
+        else:
+            configure(spark)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert "bad_knob_sink" not in [t.name for t in spark.catalog.listTables()]
 
 
 def test_stream_classifier_scores_match_batch(spark):
@@ -732,3 +823,114 @@ def test_checkpoint_restart_no_loss_no_dup(spark, tmp_path):
     assert (got["avg_value"].values == closed["avg_value"].values).all()
     # the restart-spanning window carried both pre- and post-kill events
     assert got.iloc[1]["n_events"] == 2
+
+
+_SNAPSHOT_PHASE1 = [
+    [_ev(1, "2024-01-01 00:00:00.100"), _ev(2, "2024-01-01 00:00:00.600", uid=2)],
+    [_ev(3, "2024-01-01 00:00:01.200")],
+    [_ev(4, "2024-01-01 00:00:02.300", uid=2)],
+    # opens the 3 s window; it closes only after the restart
+    [_ev(5, "2024-01-01 00:00:03.100", value=30.0)],
+]
+_SNAPSHOT_PHASE2 = _SNAPSHOT_PHASE1 + [
+    [_ev(6, "2024-01-01 00:00:03.900", value=50.0), _ev(7, "2024-01-01 00:00:04.500", uid=2)],
+    # advances the watermark past every window above
+    [_ev(8, "2024-01-01 00:01:00.000")],
+]
+
+
+def _restart_from_snapshot_stream(tmpdir: str) -> None:
+    """The streaming half of test_rocksdb_restart_from_background_snapshot,
+    run in a fresh process: the state-store maintenance task keeps the
+    interval of the session that first started it (60 s by default), so
+    only a new session can start it at a short one."""
+    import glob
+    import time
+
+    from eventstreamer_spark.session import get_spark
+
+    spark = get_spark("restart-from-snapshot", cpus=2)
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "2")
+    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "200ms")
+    path = _write_chunks(spark, tmpdir, _SNAPSHOT_PHASE1)
+    ckpt = f"{tmpdir}/ckpt"
+
+    def run(wait_for_snapshot: bool) -> bool:
+        """Run to the end of the input; with ``wait_for_snapshot``, keep
+        the query up until every state partition has a snapshot zip
+        (returns whether that happened within 60 s)."""
+        q = (
+            windowed_stream(stream_events(spark, path), "1 second", "0 seconds")
+            .writeStream.format("parquet")
+            .option("path", f"{tmpdir}/out")
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            deadline = time.time() + 60
+            while wait_for_snapshot and time.time() < deadline:
+                if all(glob.glob(f"{d}/*.zip") for d in _state_partition_dirs(ckpt)):
+                    return True
+                time.sleep(0.2)
+            return False
+        finally:
+            q.stop()
+            q.awaitTermination()
+
+    try:
+        assert run(wait_for_snapshot=True), "no background snapshot within 60 s"
+        for d in _state_partition_dirs(ckpt):
+            names = os.listdir(d)
+            snap = max(_version(n) for n in names if n.endswith(".zip"))
+            # changelogs (and their checksums) the snapshot covers
+            covered = [n for n in names if ".changelog" in n and _version(n) <= snap]
+            assert covered, (d, names)
+            for n in covered:
+                os.remove(os.path.join(d, n))
+        _write_chunks(spark, tmpdir, _SNAPSHOT_PHASE2)  # arrives while down
+        run(wait_for_snapshot=False)
+    finally:
+        spark.stop()
+
+
+def test_rocksdb_restart_from_background_snapshot(spark, tmp_path):
+    """Restart across a snapshot on the session-default RocksDB
+    provider with changelog commits: the first run commits four data
+    batches, the maintenance thread uploads a snapshot, and the
+    changelogs it covers are deleted, so the restarted query can only
+    recover from that snapshot plus the changelog tail. Every closed
+    window must then equal the batch twin, emitted exactly once."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from tests.test_streaming import _restart_from_snapshot_stream as run; "
+            f"run({str(tmp_path)!r})",
+        ],
+        cwd=root,
+        env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g"),
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert child.returncode == 0, child.stderr[-4000:]
+
+    cols = ["key", "window_start", "n_events", "avg_value", "sum_value"]
+    got = spark.read.parquet(str(tmp_path / "out")).toPandas()[cols]
+    assert not got.duplicated(["key", "window_start"]).any()  # exactly once
+    exp = windowed_stream(spark.read.parquet(str(tmp_path / "stream"))).toPandas()[cols]
+    # the 1-minute event's window stays open in state
+    exp = exp[exp.window_start != "2024-01-01 00:01:00.000000"]
+    got = got.sort_values(["key", "window_start"], ignore_index=True)
+    exp = exp.sort_values(["key", "window_start"], ignore_index=True)
+    pd.testing.assert_frame_equal(got, exp)
+    # the restart-spanning 3 s window holds events from both runs
+    spanning = got[(got.key == "1") & (got.window_start == "2024-01-01 00:00:03.000000")]
+    assert spanning.n_events.tolist() == [2]
