@@ -1,17 +1,40 @@
-"""Bounded session-scoped memo for driver-side caches.
+"""The session artifact cache, and the bounded dict it is built on.
 
-The operator modules memoize small driver-safe artifacts (collected
-LSH pair tables, k×dim centroid tables, checkpointed shingle frames)
-keyed by (applicationId, sf_dir). Inputs are immutable parquet so the
-memos cannot go stale in-session, but an unbounded dict would grow
-without limit in a long-lived service scanning many directories
-(VERDICT r5 nit) — this bounded dict caps the key count, evicting
-the least-recently-USED entry and running an optional ``on_evict``
-hook for memos that own disk paths or checkpoint blocks.
+Some queries consume an artifact that another query owns: a near-dup
+pair table, a converged centroid table, a trained classifier, a
+written parquet layout. ``session_artifact`` is the one place that
+decides when such an artifact is reused. Its contract:
+
+- **Key.** One entry per (applicationId, sf_dir, artifact name).
+  Inputs are immutable parquet, so an entry cannot go stale within
+  an application. The name carries every distinction that changes
+  the value (pair kind, centroid iterations × seeding variant).
+- **Rebuild on freed blocks.** A hit any of whose checkpoint-backed
+  frames has lost its blocks (freed out-of-band, e.g. by a manual
+  unpersist) is dropped and rebuilt, instead of returning a plan
+  that dies with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND at evaluation.
+- **Release on every removal.** Capacity eviction, ``pop``, ``del``
+  and ``clear`` all run one release hook: checkpoint-backed frames
+  have their blocks freed, a dict with a ``"root"`` has that
+  directory removed. Anything else in a value (driver rows, plain
+  scan frames) is left alone.
+- **Owners call builders directly.** The query that owns an artifact
+  runs its builder every invocation and never reads the cache, so the
+  bench's steady state always contains the build; only consumers go
+  through ``session_artifact``.
+- **Consumers evaluate within their own invocation.** A released
+  checkpoint's lineage is gone, so a handle held across later cache
+  inserts may die at evaluation. A lookup refreshes recency (LRU on
+  get), so inserts made by the same invocation never evict it.
+
+``ARTIFACT_CAPACITY`` holds every artifact one sf_dir creates, so a
+full registry pass on one sf_dir evicts nothing. ``artifact_hits``
+counts hits; ``bench.py`` names the queries that hit in its last pass.
 """
 
 from __future__ import annotations
 
+import shutil
 from collections.abc import Callable
 from typing import Any
 
@@ -23,17 +46,11 @@ class BoundedMemo(dict):
 
     Inserting a NEW key at capacity evicts the least-recently-used
     entry first. A ``get``/``__getitem__`` hit refreshes recency
-    (move-to-end), so an entry touched within the current invocation
-    can never be evicted by that same invocation's later inserts —
-    the hazard ADVICE r14 reproduced with the checkpointed pair memos
-    (a consumer holding handle A while inserting B and C evicted A's
-    blocks mid-plan: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Re-setting an
-    existing key never evicts.
+    (move-to-end). Re-setting an existing key never evicts.
 
     EVERY removal path (capacity eviction, ``pop``, ``popitem``,
     ``__delitem__``, ``clear``) runs the ``on_evict`` hook, so owned
-    resources (checkpoint blocks, tmp dirs) are freed no matter how an
-    entry leaves the memo (ADVICE r14: dict.pop used to bypass it).
+    resources are freed no matter how an entry leaves the memo.
     """
 
     def __init__(
@@ -116,47 +133,69 @@ class BoundedMemo(dict):
                 self._on_evict(key, value)
 
 
-def checkpoint_alive(df: Any) -> bool:
-    """True when a localCheckpointed DataFrame's blocks are still
-    resident (storage level not NONE). Memo getters use this to
-    ASSERT-AND-REBUILD (VERDICT r14 item 7): a memo hit whose blocks
-    were freed out-of-band (an explicit free_local_checkpoint from a
-    mis-scoped consumer, a manual unpersist) is treated as a miss and
-    rebuilt instead of handing the caller a plan that would die with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND at evaluation. Conservative:
-    any introspection failure reports alive=True (never force a
-    rebuild on a py4j quirk; the failure mode is the pre-existing
-    one, not a new rebuild loop)."""
-    try:
-        return (
-            df._jdf.queryExecution()
-            .analyzed()
-            .rdd()
-            .getStorageLevel()
-            .isValid()
-        )
-    except Exception:
-        return True
-
-
-def live_hit(memo: dict, key: Any) -> Any:
-    """Memo lookup with ASSERT-AND-REBUILD (VERDICT r14 item 7): a hit
-    any of whose DataFrame members has lost its checkpoint blocks
-    (freed out-of-band) is popped — firing the eviction hook for
-    whatever resources remain — and reported as a miss, so the getter
-    rebuilds instead of returning a plan that dies with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND at evaluation. Works for single
-    DataFrame values and tuple values with mixed members (non-frames
-    are skipped)."""
-    hit = memo.get(key)
-    if hit is None:
+def _checkpoint_rdd(member: Any) -> Any:
+    """The RDD behind a checkpoint-backed DataFrame (analyzed plan is a
+    LogicalRDD), or None for anything else: driver rows, dicts, plain
+    scan frames, or a frame whose plan cannot be introspected."""
+    if not hasattr(member, "_jdf"):
         return None
-    frames = hit if isinstance(hit, tuple) else (hit,)
-    for df in frames:
-        if hasattr(df, "_jdf") and not checkpoint_alive(df):
-            memo.pop(key, None)
-            return None
-    return hit
+    try:
+        plan = member._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            return plan.rdd()
+    except Exception:
+        pass
+    return None
+
+
+def _members(value: Any) -> tuple:
+    return value if isinstance(value, tuple) else (value,)
+
+
+def _release(_key: Any, value: Any) -> None:
+    """Free what an artifact owns: checkpoint blocks and ``"root"``
+    directories. Never raises for members that own nothing."""
+    for m in _members(value):
+        if isinstance(m, dict) and "root" in m:
+            shutil.rmtree(m["root"], ignore_errors=True)
+        elif _checkpoint_rdd(m) is not None:
+            free_local_checkpoint(m)
+
+
+def _blocks_alive(value: Any) -> bool:
+    for m in _members(value):
+        rdd = _checkpoint_rdd(m)
+        if rdd is not None and not rdd.getStorageLevel().isValid():
+            return False
+    return True
+
+
+# A full registry pass on one sf_dir creates 17 artifacts (measured at
+# sf0.01); 32 leaves headroom for new ones.
+ARTIFACT_CAPACITY = 32
+_ARTIFACTS: dict = BoundedMemo(maxsize=ARTIFACT_CAPACITY, on_evict=_release)
+_hits = 0
+
+
+def session_artifact(spark: Any, sf_dir: str, name: str, build: Callable[[], Any]) -> Any:
+    """The cached artifact ``name`` for this application and sf_dir,
+    built by ``build()`` on a miss (see the module docstring)."""
+    global _hits
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    hit = _ARTIFACTS.get(key, _MISSING)
+    if hit is not _MISSING:
+        if _blocks_alive(hit):
+            _hits += 1
+            return hit
+        _ARTIFACTS.pop(key)
+    value = build()
+    _ARTIFACTS[key] = value
+    return value
+
+
+def artifact_hits() -> int:
+    """Number of cache hits served so far in this process."""
+    return _hits
 
 
 def free_local_checkpoint(df: Any) -> None:

@@ -37,12 +37,12 @@ DispatcherFunction.cs:35); this is Tier B scale machinery.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.memo import free_local_checkpoint
+from eventstreamer_spark.session import positive_int_env
 
 # Cap on range partitions for the parallel exact rank; env-overridable
 # for production clusters (the session.py SPARK_GRAFT_* pattern). The
@@ -51,7 +51,7 @@ from eventstreamer_spark.memo import free_local_checkpoint
 # report inputs at sf0.1, while one partition per ~16 MB of estimated
 # input keeps the same RangePartitioning plan shape and scales back up
 # with the data.
-RANK_NPART = int(os.environ.get("SPARK_GRAFT_RANK_MAX_PARTITIONS", "32"))
+RANK_NPART = positive_int_env("SPARK_GRAFT_RANK_MAX_PARTITIONS", 32)
 _RANK_BYTES_PER_PART = 16 << 20
 
 

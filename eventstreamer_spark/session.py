@@ -72,7 +72,7 @@ def get_spark(app_name: str = "eventstreamer-spark", cpus: int | None = None) ->
     sizing at any data volume).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = positive_int_env("SPARK_GRAFT_CPUS", 32)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

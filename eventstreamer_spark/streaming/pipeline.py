@@ -36,7 +36,6 @@ from pyspark.sql import types as T
 from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.functions.casting import fmt_ts, round6
 from eventstreamer_spark.operators.windowed import tumbling_stats
-from eventstreamer_spark.memo import BoundedMemo
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.session import positive_int_env
 from eventstreamer_spark.sources.tables import load_events

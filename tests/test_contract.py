@@ -36,3 +36,21 @@ def test_query_matches_oracle(spark, duck, name):
 def test_rows_only_queries_run(spark, name):
     df = QUERIES[name](spark, SF_DIR)
     assert df.limit(1).count() >= 0
+
+
+@pytest.mark.parametrize("knob", ["SPARK_GRAFT_CPUS", "SPARK_GRAFT_BENCH_PASSES"])
+@pytest.mark.parametrize("bad", ["eight", "0"])
+def test_bad_startup_knob_fails_before_spark(monkeypatch, knob, bad):
+    """get_spark's core count and bench.py's pass count must be ints
+    >= 1; anything else raises a ValueError naming the variable before
+    a session is built (bench.py parses its knob before get_spark)."""
+    import bench
+    from eventstreamer_spark.session import get_spark
+
+    monkeypatch.setenv(knob, bad)
+    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: pytest.fail("Spark started"))
+    with pytest.raises(ValueError, match=knob):
+        if knob == "SPARK_GRAFT_CPUS":
+            get_spark()
+        else:
+            bench.main()

@@ -250,10 +250,10 @@ def test_connected_components_matches_union_find(spark, edges):
 
 
 def test_bounded_memo_evicts_oldest():
-    """The session memos (_PAIRS_CACHE, _CENT_CACHE, upsert dirs) are
-    FIFO-bounded: inserting past maxsize evicts the oldest key and
-    fires the eviction hook, so a long-lived service scanning many
-    sf dirs cannot leak driver memory or temp dirs."""
+    """The session memos (the artifact cache, the scan memo) are
+    bounded: inserting past maxsize evicts the oldest key and fires
+    the eviction hook, so a long-lived service scanning many sf dirs
+    cannot leak driver memory or temp dirs."""
     from eventstreamer_spark.memo import BoundedMemo
 
     evicted = []
@@ -267,13 +267,12 @@ def test_bounded_memo_evicts_oldest():
     m["k3"] = 33
     assert len(m) == 3 and m["k3"] == 33 and len(evicted) == 2
     # the live caches are bounded instances
-    from eventstreamer_spark.operators.dedup import _PAIRS_CACHE, _SHINGLED_CACHE
-    from eventstreamer_spark.operators.similarity import _CENT_CACHE
-    from eventstreamer_spark.operators.text import _BPE_CACHE
+    from eventstreamer_spark.memo import _ARTIFACTS, ARTIFACT_CAPACITY
+    from eventstreamer_spark.sources.tables import _SCAN_MEMO
 
-    # (_UPSERT_CACHE was removed in r7 — ADVICE: it was write-only)
-    for cache in (_PAIRS_CACHE, _SHINGLED_CACHE, _CENT_CACHE, _BPE_CACHE):
+    for cache in (_ARTIFACTS, _SCAN_MEMO):
         assert isinstance(cache, BoundedMemo)
+    assert _ARTIFACTS.maxsize == ARTIFACT_CAPACITY
 
 
 def test_residual_artifacts_memo_builds_once(spark):
@@ -283,14 +282,11 @@ def test_residual_artifacts_memo_builds_once(spark):
     optimized plan must be a pure checkpoint scan (LogicalRDD with no
     build operators), so every consumer read is a materialized-rows
     scan, never a retrain."""
-    from eventstreamer_spark.operators.audit import (
-        _RESIDUAL_MEMO,
-        residual_artifacts_memo,
-    )
+    from eventstreamer_spark.memo import _ARTIFACTS
+    from eventstreamer_spark.operators.audit import residual_artifacts_memo
 
     sf_dir = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf_dir, 4, True)
-    _RESIDUAL_MEMO.pop(key, None)
+    _ARTIFACTS.pop((spark.sparkContext.applicationId, sf_dir, "residual_artifacts"), None)
     sp1, fv1 = residual_artifacts_memo(spark, sf_dir)
     sp2, fv2 = residual_artifacts_memo(spark, sf_dir)
     assert sp1 is sp2 and fv1 is fv2
@@ -311,27 +307,27 @@ def test_pairs_memo_checkpoints_once(spark):
     (app, sf_dir, kind) must return the SAME handle, its optimized
     plan must be a pure checkpoint scan (LogicalRDD — no LSH rebuild,
     and no per-call applySchemaToPythonRDD re-ship of 411k simhash
-    rows, the measured 1.5-2 s/consumer cost of the old row memo), and
-    the eviction hook that frees the checkpoint blocks must be wired."""
-    from eventstreamer_spark.operators.dedup import (
-        _PAIRS_CACHE,
-        _free_pairs,
-        simhash_pairs_for,
-    )
+    rows, the measured 1.5-2 s/consumer cost of the old row memo), the
+    repeat call must count as one cache hit, and the release hook that
+    frees the checkpoint blocks must be wired."""
+    from eventstreamer_spark.memo import _ARTIFACTS, _release, artifact_hits
+    from eventstreamer_spark.operators.dedup import simhash_pairs_for
 
     sf_dir = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf_dir, "simhash")
-    _PAIRS_CACHE.pop(key, None)
+    key = (spark.sparkContext.applicationId, sf_dir, "pairs/simhash")
+    _ARTIFACTS.pop(key, None)
     p1 = simhash_pairs_for(spark, sf_dir)
+    hits = artifact_hits()
     p2 = simhash_pairs_for(spark, sf_dir)
     assert p1 is p2
+    assert artifact_hits() == hits + 1
     plan = p1._jdf.queryExecution().optimizedPlan().toString()
     assert plan.strip().startswith("LogicalRDD"), plan
     assert "Join" not in plan and "Aggregate" not in plan, plan
     # content pin, not just no-exception: an empty/corrupted checkpoint
     # would return zero pairs (ADVICE r14)
     assert p1.count() > 0
-    assert _PAIRS_CACHE._on_evict is _free_pairs
+    assert _ARTIFACTS._on_evict is _release
 
 
 def test_f64_matmul_exact_at_quantization_bound():
@@ -396,38 +392,28 @@ def test_pairs_memo_handle_survives_same_invocation_inserts(spark):
     dedup_method_agreement shape) must still be able to evaluate the
     held handle — the get refreshed its recency, so the inserts evict
     other entries first."""
-    from pyspark.sql import functions as F
-
-    from eventstreamer_spark.operators.dedup import (
-        _PAIRS_CACHE,
-        simhash_pairs_for,
-    )
+    from eventstreamer_spark.memo import _ARTIFACTS
+    from eventstreamer_spark.operators.dedup import simhash_pairs_for
 
     sf_dir = "/root/testdata/sf0.001"
-    _PAIRS_CACHE.pop((spark.sparkContext.applicationId, sf_dir, "simhash"), None)
+    _ARTIFACTS.pop((spark.sparkContext.applicationId, sf_dir, "pairs/simhash"), None)
     h = simhash_pairs_for(spark, sf_dir)
-    # age the held entry to LRU position, then fill the memo to force
-    # capacity evictions while the handle is live
-    fillers = []
-    for i in range(_PAIRS_CACHE.maxsize - 1):
-        f = spark.range(1).select(F.col("id")).localCheckpoint(eager=True)
-        _PAIRS_CACHE[("fill", sf_dir, str(i))] = f
-        fillers.append(f)
+    # age the held entry to LRU position, then fill the cache to force
+    # capacity evictions while the handle is live (fillers own nothing,
+    # so their own eviction releases nothing)
+    for i in range(_ARTIFACTS.maxsize - 1):
+        _ARTIFACTS[("fill", sf_dir, str(i))] = f"filler-{i}"
     h2 = simhash_pairs_for(spark, sf_dir)  # get: refreshes recency
     assert h2 is h
-    _PAIRS_CACHE[("fill", sf_dir, "overflow-1")] = spark.range(1).localCheckpoint(
-        eager=True
-    )
-    _PAIRS_CACHE[("fill", sf_dir, "overflow-2")] = spark.range(1).localCheckpoint(
-        eager=True
-    )
+    _ARTIFACTS[("fill", sf_dir, "overflow-1")] = "overflow-1"
+    _ARTIFACTS[("fill", sf_dir, "overflow-2")] = "overflow-2"
     # the held handle must still evaluate: without LRU-on-get the
     # overflow inserts evicted it and this scan died with
     # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
     assert h.count() > 0
-    # cleanup: drop the fillers so later tests see a sane memo
-    for k in [k for k in list(_PAIRS_CACHE) if k[0] == "fill"]:
-        _PAIRS_CACHE.pop(k, None)
+    # cleanup: drop the fillers so later tests see a sane cache
+    for k in [k for k in list(_ARTIFACTS) if k[0] == "fill"]:
+        _ARTIFACTS.pop(k, None)
 
 
 def test_memo_getter_rebuilds_after_out_of_band_free(spark):
@@ -435,15 +421,12 @@ def test_memo_getter_rebuilds_after_out_of_band_free(spark):
     checkpoint's blocks are freed out-of-band, the getter must treat
     the stale hit as a miss and rebuild — re-consuming after an
     eviction can never throw."""
-    from eventstreamer_spark.memo import free_local_checkpoint
-    from eventstreamer_spark.operators.dedup import (
-        _PAIRS_CACHE,
-        simhash_pairs_for,
-    )
+    from eventstreamer_spark.memo import _ARTIFACTS, free_local_checkpoint
+    from eventstreamer_spark.operators.dedup import simhash_pairs_for
 
     sf_dir = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf_dir, "simhash")
-    _PAIRS_CACHE.pop(key, None)
+    key = (spark.sparkContext.applicationId, sf_dir, "pairs/simhash")
+    _ARTIFACTS.pop(key, None)
     h = simhash_pairs_for(spark, sf_dir)
     n = h.count()
     free_local_checkpoint(h)  # out-of-band: memo still holds the key
@@ -779,20 +762,29 @@ def test_selection_method_agreement_is_consistent(spark):
         assert r.spearman_rho == expect, (r, expect)
 
 
-def test_residual_memo_eviction_frees_blocks(spark):
-    """ADVICE r12: evicting a residual-memo entry must release the
-    executor-resident localCheckpoint blocks deterministically, not
-    wait for JVM GC. Verifies (a) the hook is wired into the memo,
-    (b) the hook actually drops the checkpointed RDD's storage (the
-    measured gotcha: Dataset.unpersist() alone leaves the block), and
-    (c) a capacity eviction routes through it."""
-    from eventstreamer_spark.memo import BoundedMemo
-    from eventstreamer_spark.operators.audit import (
-        _RESIDUAL_MEMO,
-        _unpersist_residual,
+def test_residual_memo_eviction_frees_blocks(spark, tmp_path):
+    """ADVICE r12: removing an artifact from the session cache must
+    release its executor-resident localCheckpoint blocks
+    deterministically, not wait for JVM GC. Verifies (a) the release
+    hook is wired into the cache, (b) it actually drops the
+    checkpointed RDD's storage (the measured gotcha: Dataset.unpersist()
+    alone leaves the block), on a capacity eviction and on a pop of the
+    eager-checkpoint artifacts that once had no hook at all (shingled
+    corpus, brute truth, SemDeDup assignment), (c) it removes a layout
+    artifact's root directory, and (d) it skips, without a warning,
+    everything that owns no blocks: driver rows, a plain scan frame
+    (pq_parts' ``e``) and junk."""
+    import warnings
+
+    from eventstreamer_spark.memo import _ARTIFACTS, BoundedMemo, _release
+    from eventstreamer_spark.operators.dedup import shingled_docs
+    from tests.conftest import SF_DIR
+    from eventstreamer_spark.operators.similarity import (
+        brute_truth_memo,
+        semdedup_assign_memo,
     )
 
-    assert _RESIDUAL_MEMO._on_evict is _unpersist_residual
+    assert _ARTIFACTS._on_evict is _release
 
     sc = spark.sparkContext
 
@@ -804,42 +796,61 @@ def test_residual_memo_eviction_frees_blocks(spark):
         # holding checkpoints session-long)
         return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
 
-    before = stored_ids()
-    df = spark.range(64).selectExpr("id", "id * 2 AS y").localCheckpoint(eager=True)
-    new_ids = stored_ids() - before
-    assert len(new_ids) == 1, new_ids
-    m = BoundedMemo(maxsize=1, on_evict=_unpersist_residual)
-    m["a"] = (df,)
-    m["b"] = ()  # evicts "a" -> hook must free df's checkpoint block
-    assert not (stored_ids() & new_ids), "evicted checkpoint block still stored"
-    # guarded: junk values must not raise through an insert
-    _unpersist_residual("k", (object(),))
+    def rdd_id(df):
+        return df._jdf.queryExecution().analyzed().rdd().id()
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        df = spark.range(64).selectExpr("id", "id * 2 AS y").localCheckpoint(eager=True)
+        assert rdd_id(df) in stored_ids()
+        m = BoundedMemo(maxsize=1, on_evict=_release)
+        m["a"] = (df,)
+        m["b"] = ()  # evicts "a" -> hook must free df's checkpoint block
+        assert rdd_id(df) not in stored_ids(), "evicted checkpoint block still stored"
+
+        sf_dir = SF_DIR
+        app = sc.applicationId
+        for name, getter in (
+            ("shingled_docs", shingled_docs),
+            ("brute_truth", brute_truth_memo),
+            ("semdedup_assign", semdedup_assign_memo),
+        ):
+            _ARTIFACTS.pop((app, sf_dir, name), None)
+            rid = rdd_id(getter(spark, sf_dir))
+            assert rid in stored_ids(), name
+            _ARTIFACTS.pop((app, sf_dir, name))
+            assert rid not in stored_ids(), f"{name}: released block still stored"
+
+        root = tmp_path / "layout"
+        root.mkdir()
+        _release("k", {"root": str(root), "n": 1})
+        assert not root.exists()
+
+        scan = spark.read.parquet(f"{sf_dir}/nation.parquet")
+        rows = spark.range(3).collect()
+        _release("k", (scan, rows, object()))
+        _release("k", (rows, spark.range(1).schema))
+        _release("k", [(1, "a", "b", "ab", 7)])
+        _release("k", object())
+    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
 
 
 def test_classifier_and_dsir_memos(spark):
     """r14 optimization: the ridge-classifier artifacts and the DSIR
     score table are built once per (applicationId, sf_dir) and shared
-    by their consumer queries. Pins (a) the eviction hooks are wired,
-    (b) repeat calls return the SAME handles (no rebuild), and (c) the
-    memoized weight vector equals an independent direct training run —
-    the memo changes WHO pays, never the values."""
+    by their consumer queries. Pins (a) repeat calls return the SAME
+    handles (no rebuild), and (b) the memoized weight vector equals an
+    independent direct training run — the cache changes WHO pays,
+    never the values. (The release hook is one for the whole cache,
+    pinned in test_pairs_memo_checkpoints_once.)"""
     from tests.conftest import SF_DIR
 
-    from eventstreamer_spark.operators.curation import (
-        _DSIR_MEMO,
-        _free_dsir,
-        dsir_scores_memo,
-    )
+    from eventstreamer_spark.operators.curation import dsir_scores_memo
     from eventstreamer_spark.operators.quality import (
-        _QC_ART_MEMO,
         _doc_features,
-        _free_qc_artifacts,
         classifier_artifacts_memo,
         train_ridge_weights,
     )
-
-    assert _QC_ART_MEMO._on_evict is _free_qc_artifacts
-    assert _DSIR_MEMO._on_evict is _free_dsir
 
     feats1, lab1, w1 = classifier_artifacts_memo(spark, SF_DIR)
     feats2, lab2, w2 = classifier_artifacts_memo(spark, SF_DIR)

@@ -644,21 +644,34 @@ def test_configure_applies_checkpoint_confs_on_file_only(spark):
 
 
 @pytest.mark.parametrize(
-    "knob", ["SPARK_GRAFT_GATE_PARTITIONS", "SPARK_GRAFT_SHUFFLE_PARTITIONS"]
+    "knob",
+    [
+        "SPARK_GRAFT_GATE_PARTITIONS",
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+        "SPARK_GRAFT_RANK_MAX_PARTITIONS",
+    ],
 )
 @pytest.mark.parametrize("bad", ["eight", "0"])
 def test_bad_partition_knob_fails_before_any_batch(spark, tmp_path, monkeypatch, knob, bad):
-    """Both partition knobs size streaming state partitions; a value
-    that is not an int >= 1 raises a ValueError naming the variable
-    before any conf changes or any micro-batch runs."""
+    """The partition knobs (streaming state partitions, shuffle
+    partitions, the parallel-rank cap read at import); a value that is
+    not an int >= 1 raises a ValueError naming the variable before any
+    conf changes or any micro-batch runs."""
+    import importlib
+
+    from eventstreamer_spark.operators import ranks
+
     path = _write_chunks(spark, str(tmp_path), [[_ev(1, "2024-01-01 00:00:00.100")]])
     before = spark.conf.get("spark.sql.shuffle.partitions")
     monkeypatch.setenv(knob, bad)
     with pytest.raises(ValueError, match=knob):
         if knob == "SPARK_GRAFT_GATE_PARTITIONS":
             run_to_memory(windowed_stream(stream_events(spark, path)), "bad_knob_sink")
-        else:
+        elif knob == "SPARK_GRAFT_SHUFFLE_PARTITIONS":
             configure(spark)
+        else:
+            importlib.reload(ranks)
+    assert ranks.RANK_NPART >= 1
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert "bad_knob_sink" not in [t.name for t in spark.catalog.listTables()]
 
